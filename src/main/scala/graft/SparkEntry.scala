@@ -90,9 +90,9 @@ object SparkEntry {
     def compacted(s: SparkSession, d: String): graft.log.BulkFactStore =
       cache.getOrBuild((s, d, None))(
         graft.log.Compaction.compact(s, EventsReplay.snapshot(s, d).store))
-    // keyed on the cutoff TIMESTAMP, not its resolved tx: resolveTx is a
-    // Spark aggregation over the (unpersisted) txs table, and paying it
-    // per call would put a redundant job inside every cached read
+    // keyed on the cutoff TIMESTAMP as the caller passes it: the memoised
+    // cost is the compactBefore rewrite (two eager checkpoints), which a
+    // hit skips; resolving the cutoff is a driver-side index lookup
     def retained(s: SparkSession, d: String, cutoff: Timestamp): graft.log.BulkFactStore =
       cache.getOrBuild((s, d, Some(cutoff))) {
         val st = EventsReplay.snapshot(s, d).store

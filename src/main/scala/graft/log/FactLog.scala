@@ -3,6 +3,7 @@ package graft.log
 import scala.collection.mutable
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession, Dataset}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import graft.model.{Fact, Touch, TxMeta}
 
 /**
@@ -30,11 +31,15 @@ trait FactStore {
   /** (tx, txInstant) transaction metadata. */
   def txsDF: DataFrame
 
-  /** Resolve an as-of date to the max tx whose instant ≤ date
-    * (FluxGraph.java:224-243 does a hand-rolled max over all txs). */
+  /** Resolve an as-of date to the max tx whose instant ≤ date, -1 when
+    * none (setCheckpointTime, FluxGraph.java:224-243). A
+    * [[BulkFactStore]] answers from a driver-side index of its txs table:
+    * one collect per store, 16 B per tx on the driver, then O(log n) per
+    * call with no Spark job. */
   def resolveTx(at: Timestamp): Long
 
-  /** Highest committed tx id (head of the log). */
+  /** Highest committed tx id (head of the log), -1 for an empty log.
+    * Answered from the same driver-side index as [[resolveTx]]. */
   def headTx: Long
 
   /** True when the store guarantees at most ONE fact per (e, attr) —
@@ -67,15 +72,14 @@ final class BulkFactStore(
     val providedEdges: Option[DataFrame] = None) extends FactStore {
   import org.apache.spark.sql.functions._
 
-  def resolveTx(at: Timestamp): Long = {
-    val r = txsDF.where(col("txInstant") <= lit(at)).agg(max(col("tx"))).head()
-    if (r.isNullAt(0)) -1L else r.getLong(0)
-  }
+  /** Built on first use. The store is a fixed view (`spark.read.parquet`
+    * lists its files at open), so the index never goes stale. */
+  private lazy val txIndex: TxIndex = TxIndex.of(txsDF)
 
-  lazy val headTx: Long = {
-    val r = txsDF.agg(max(col("tx"))).head()
-    if (r.isNullAt(0)) -1L else r.getLong(0)
-  }
+  def resolveTx(at: Timestamp): Long =
+    txIndex.resolve(DateTimeUtils.fromJavaTimestamp(at))
+
+  def headTx: Long = txIndex.headTx
 
   /** Persist this store in the same tx-bucketed parquet layout the
     * mutable log writes ([[FactLog.open]] reopens it): the durable path
@@ -88,6 +92,45 @@ final class BulkFactStore(
     touchesDF.write.mode("overwrite").parquet(s"$root/touches")
     txsDF.write.mode("overwrite").parquet(s"$root/txs")
     StoreMeta.write(spark, root, txBucketSize, preDeduped)
+  }
+}
+
+/** A txs table `(tx, txInstant)` as driver-side arrays: the non-null
+  * instants in Spark's µs domain, sorted, with the running max tx over
+  * that order — the peer-cached log index the reference resolves
+  * checkpoint times against. `headTx` is the max tx over ALL rows,
+  * null-instant ones included. */
+private[log] final class TxIndex(instants: Array[Long], maxTxUpTo: Array[Long],
+                                 val headTx: Long) {
+  /** Max tx whose instant ≤ `atMicros`, -1 when none. */
+  def resolve(atMicros: Long): Long = {
+    // first position whose instant is > atMicros
+    var lo = 0
+    var hi = instants.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (instants(mid) <= atMicros) lo = mid + 1 else hi = mid
+    }
+    if (lo == 0) -1L else maxTxUpTo(lo - 1)
+  }
+}
+
+private[log] object TxIndex {
+  import org.apache.spark.sql.functions._
+
+  /** One collect of `(µs instant, tx)`. The CAST is the coercion Spark
+    * applies when it compares `txInstant` with a TIMESTAMP value, so a
+    * TIMESTAMP_NTZ column resolves in the session time zone exactly as a
+    * `txInstant <= lit(at)` filter would. */
+  def of(txs: DataFrame): TxIndex = {
+    val rows = txs.where(col("tx").isNotNull)
+      .select(unix_micros(col("txInstant").cast("timestamp")), col("tx").cast("long"))
+      .collect()
+    val headTx = if (rows.isEmpty) -1L else rows.iterator.map(_.getLong(1)).max
+    val timed = rows.filterNot(_.isNullAt(0)).map(r => (r.getLong(0), r.getLong(1)))
+      .sortBy(_._1)
+    val maxTxUpTo = timed.map(_._2).scanLeft(Long.MinValue)(math.max).tail
+    new TxIndex(timed.map(_._1), maxTxUpTo, headTx)
   }
 }
 

@@ -30,6 +30,9 @@ class PersistenceSpec extends AnyFunSuite {
     assert(head.prop("p", PropType.PLong, A.Vertex).collect().map(_.getAs[Long]("v")).toSeq == Seq(3L))
     assert(store.headTx == g.log.headTx)
     assert(store.resolveTx(ts("2024-02-15 00:00:00")) == g.log.resolveTx(ts("2024-02-15 00:00:00")))
+    g.log.allTxs.foreach { m =>
+      assert(store.resolveTx(m.txInstant) == g.log.resolveTx(m.txInstant), s"resolveTx(${m.txInstant})")
+    }
 
     // asOf parity with the in-memory log
     val feb = head.asOf(ts("2024-02-15 00:00:00"))
